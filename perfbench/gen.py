@@ -105,85 +105,125 @@ def _month(start, k):
     return datetime.date(start.year + y, m + 1, 1)
 
 
+def _months_between(start, end):
+    return (end.year - start.year) * 12 + end.month - start.month
+
+
+# The paper's series registry (src/main/scala/graft/model/SeriesRegistry.scala,
+# after the reference's src/config.py:28-52): 9 FRED series, each with its
+# publication frequency, and 5 BLS series fetched as one batch.
+FRED_REGISTRY = [("PCE_NOMINAL", "PCEC", "Q"), ("PCE_REAL", "PCECC96", "Q"),
+                 ("RETAIL_SALES", "RSXFS", "M"), ("SENTIMENT", "UMCSENT", "M"),
+                 ("CPI_ALL", "CPIAUCSL", "M"), ("GDP_REAL", "GDPC1", "Q"),
+                 ("UNRATE", "UNRATE", "M"), ("SAVINGS_RATE", "PSAVERT", "M"),
+                 ("MONEY_COST", "FEDFUNDS", "M")]
+BLS_REGISTRY = [("CPI_URBAN", "CUUR0000SA0"), ("CPI_CORE", "CUUR0000SA0L1E"),
+                ("GAS_PRICE", "APU000074714"), ("AVG_WAGES", "CES0500000003"),
+                ("WAGE_INDEX", "CIU2020000000000I")]
+
+
 class EtlSchedule:
-    """A seeded FRED/BLS history: day 0 is the backfill; on each later day a
-    seeded minority of FRED series gains a month or revises a past value, and
-    on even days the BLS batch gains a month for one series. The rest of the
-    payloads are byte-identical to the day before, so both the hash-skip path
-    and the classify/upsert path run every day."""
+    """A seeded FRED/BLS history on a monthly release calendar.
 
-    FRED_START = datetime.date(1990, 1, 1)
-    BLS_START = datetime.date(2019, 1, 1)
+    Day 0 is the backfill. Every series publishes about once a month: a
+    release adds the next period and revises the one before it, as monthly
+    statistical releases do. A month is taken as 21 business days with the
+    14 releases on the days that are not a multiple of 3, so every 3-day
+    block is two release days (one series each) and one quiet day, and
+    about 1 in 21 series changes per day. Which series releases on which
+    slot, and every value, come from the seed; whether a slot is a monthly
+    FRED, a quarterly FRED or a BLS release is fixed, so every seed's run
+    does the same work.
+    Unchanged payloads are byte-identical to the day before, so the
+    hash-skip path and the classify/upsert path both run.
 
-    def __init__(self, seed, n_fred, n_obs, n_bls, bls_months, change_share):
+    History sizes follow the reference's envelope (SURVEY.md section 6):
+    FRED from 1960 (monthly ~770 observations, quarterly ~260), BLS from
+    the pipeline's 2021 start year. BLS series are all generated monthly,
+    the only period format ("Mxx") the BLS parser reads.
+    """
+
+    FRED_START = datetime.date(1960, 1, 1)
+    BLS_START = datetime.date(2021, 1, 1)
+    BASE_DATE = datetime.date(2024, 6, 1)
+    CYCLE = 21
+    # the 14 release slots: 6 monthly FRED, 3 quarterly FRED, 5 BLS
+    SLOTS = ["FM", "FQ", "B", "FM", "FM", "B", "FQ", "FM", "B", "FM", "B", "FQ", "B", "FM"]
+
+    def __init__(self, seed):
         self.seed = seed
-        self.fred = [(f"FRED_SERIES_{i:03d}", f"FS{i:04d}") for i in range(n_fred)]
-        self.bls = [(f"BLS_SERIES_{i:02d}", f"CUUR{i:07d}SA0") for i in range(n_bls)]
-        self.n_obs, self.bls_months, self.change_share = n_obs, bls_months, change_share
+        self.fred = [(name, sid) for name, sid, _ in FRED_REGISTRY]
+        self.bls = list(BLS_REGISTRY)
+        self.freq = {sid: f for _, sid, f in FRED_REGISTRY}
 
     def _initial(self, r):
-        def series(n):
+        def series(start, step, n):
             walk = np.round(100 + np.cumsum(r.normal(0, 1, n)), 2)
             missing = r.random(n) < 0.03
-            return [None if m else float(x) for x, m in zip(walk, missing)]
-        return ({sid: series(self.n_obs) for _, sid in self.fred},
-                {sid: series(self.bls_months) for _, sid in self.bls})
+            return [[_month(start, k * step), None if m else float(x)]
+                    for k, (x, m) in enumerate(zip(walk, missing))]
+        months = _months_between(self.FRED_START, self.BASE_DATE)
+        fred = {sid: series(self.FRED_START, 3, months // 3) if self.freq[sid] == "Q"
+                else series(self.FRED_START, 1, months) for _, sid in self.fred}
+        bls_months = _months_between(self.BLS_START, self.BASE_DATE)
+        bls = {sid: series(self.BLS_START, 1, bls_months) for _, sid in self.bls}
+        return fred, bls
+
+    @staticmethod
+    def _release(r, obs, step):
+        """Adds the next period and revises the latest one."""
+        last = obs[-1][1] if obs[-1][1] is not None else 100.0
+        obs[-1][1] = round(last + float(r.uniform(0.01, 2.0)), 2)
+        obs.append([_month(obs[-1][0], step), round(obs[-1][1] + float(r.normal(0, 1)), 2)])
 
     def days(self, n_days):
-        """Yields (day, fred values, bls values, changed fred ids, bls changed,
-        expected fact counts) for day 0..n_days; values are lists in date
-        order, None for a missing observation."""
+        """Yields (day, fred, bls, changed fred id or None, bls changed,
+        expected fact counts) for day 0..n_days; fred and bls map a series
+        id to its [date, value] observations, value None when missing."""
         r = _rng(self.seed, 3)
         fred, bls = self._initial(r)
         total = sum(map(len, fred.values())) + sum(map(len, bls.values()))
-        yield 0, fred, bls, set(fred), True, {"inserted": total, "updated": 0, "unchanged": 0}
-        ids = [sid for _, sid in self.fred]
-        n_change = max(2, round(len(ids) * self.change_share))
+        yield 0, fred, bls, None, True, {"inserted": total, "updated": 0, "unchanged": 0}
+        queues = {}
         for day in range(1, n_days + 1):
-            # the same shape every day (half the changed series gain a month,
-            # half revise one past value; the BLS batch gains a month on even
-            # days), so days differ only in which series and values change
-            changed = [str(x) for x in r.choice(ids, n_change, replace=False)]
-            appended, revised = changed[: n_change // 2], changed[n_change // 2:]
-            for sid in appended:
-                vals = fred[sid]
-                last = next((v for v in reversed(vals) if v is not None), 100.0)
-                vals.append(round(last + float(r.normal(0, 1)), 2))
-            for sid in revised:
-                vals = fred[sid]
-                i = int(r.integers(0, len(vals)))
-                base = vals[i] if vals[i] is not None else 100.0
-                vals[i] = round(base + float(r.uniform(0.01, 2.0)), 2)
-            bls_changed = day % 2 == 0
-            if bls_changed:
-                sid = self.bls[int(r.integers(0, len(self.bls)))][1]
-                last = next((v for v in reversed(bls[sid]) if v is not None), 100.0)
-                bls[sid].append(round(last + 0.1, 2))
-            inserted = len(appended) + int(bls_changed)
-            total += inserted
-            yield day, fred, bls, set(changed), bls_changed, {
-                "inserted": inserted, "updated": len(revised),
-                "unchanged": total - inserted - len(revised)}
+            pos = (day - 1) % self.CYCLE
+            if pos == 0:
+                queues = {"F" + f: [str(x) for x in r.permutation(
+                    [sid for _, sid in self.fred if self.freq[sid] == f])] for f in "MQ"}
+                queues["B"] = [str(x) for x in r.permutation([sid for _, sid in self.bls])]
+            changed, bls_changed, inserted = None, False, 0
+            if (pos + 1) % 3 != 0:
+                slot = self.SLOTS[pos - pos // 3]
+                sid = queues[slot].pop(0)
+                if slot != "B":
+                    self._release(r, fred[sid], 3 if slot == "FQ" else 1)
+                    changed = sid
+                else:
+                    self._release(r, bls[sid], 1)
+                    bls_changed = True
+                inserted = 1
+                total += 1
+            yield day, fred, bls, changed, bls_changed, {
+                "inserted": inserted, "updated": inserted,
+                "unchanged": total - 2 * inserted}
 
-    def fred_payload(self, vals):
-        obs = []
-        for k, v in enumerate(vals):
-            d = _month(self.FRED_START, k).isoformat()
-            obs.append({"date": d, "value": "." if v is None else f"{v:.2f}",
-                        "realtime_start": d, "realtime_end": "9999-12-31"})
-        return {"realtime_start": "1990-01-01", "realtime_end": "9999-12-31",
-                "units": "Index", "output_type": 1, "count": len(obs), "offset": 0,
-                "limit": 100000, "observations": obs}
+    def fred_payload(self, obs):
+        rows = []
+        for date, v in obs:
+            d = date.isoformat()
+            rows.append({"date": d, "value": "." if v is None else f"{v:.2f}",
+                         "realtime_start": d, "realtime_end": "9999-12-31"})
+        return {"realtime_start": "1960-01-01", "realtime_end": "9999-12-31",
+                "units": "Index", "output_type": 1, "count": len(rows), "offset": 0,
+                "limit": 100000, "observations": rows}
 
     def bls_payload(self, bls):
         series = []
         for _, sid in self.bls:
-            data = []
-            for k, v in enumerate(bls[sid]):
-                d = _month(self.BLS_START, k)
-                data.append({"year": str(d.year), "period": f"M{d.month:02d}",
-                             "periodName": d.strftime("%B"),
-                             "value": "-" if v is None else f"{v:.2f}", "footnotes": [{}]})
+            data = [{"year": str(d.year), "period": f"M{d.month:02d}",
+                     "periodName": d.strftime("%B"),
+                     "value": "-" if v is None else f"{v:.2f}", "footnotes": [{}]}
+                    for d, v in bls[sid]]
             series.append({"seriesID": sid, "data": data[::-1]})  # most recent first
         return {"status": "REQUEST_SUCCEEDED", "responseTime": 150, "message": [],
                 "Results": {"series": series}}
@@ -196,7 +236,7 @@ class EtlSchedule:
         for day, fred, bls, changed, bls_changed, counts in self.days(n_days):
             d = os.path.join(out_dir, f"day{day:03d}")
             os.makedirs(d)
-            files = {f"fred_{sid}.json": (sid in changed, lambda sid=sid: self.fred_payload(fred[sid]))
+            files = {f"fred_{sid}.json": (sid == changed, lambda sid=sid: self.fred_payload(fred[sid]))
                      for _, sid in self.fred}
             files["bls.json"] = (bls_changed, lambda: self.bls_payload(bls))
             for name, (dirty, payload) in files.items():
@@ -214,7 +254,7 @@ class EtlSchedule:
                 "skipped": []}
         with open(os.path.join(out_dir, "series.json"), "w") as f:
             json.dump({"fred": [list(p) for p in self.fred], "bls": [list(p) for p in self.bls],
-                       "base_date": "2024-06-01", "days": n_days,
+                       "base_date": self.BASE_DATE.isoformat(), "days": n_days,
                        "days_per_round": days_per_round, "setup_reps": setup_reps}, f)
         return expected
 
@@ -224,13 +264,8 @@ class EtlSchedule:
         for day, fred, bls, *_ in self.days(last_day):
             if day == last_day:
                 break
-        fact = []
-        for name, sid in self.fred:
-            for k, v in enumerate(fred[sid]):
-                fact.append((sid, name, _month(self.FRED_START, k), v, "FRED"))
-        for name, sid in self.bls:
-            for k, v in enumerate(bls[sid]):
-                fact.append((sid, name, _month(self.BLS_START, k), v, "BLS"))
+        fact = [(sid, name, d, v, "FRED") for name, sid in self.fred for d, v in fred[sid]]
+        fact += [(sid, name, d, v, "BLS") for name, sid in self.bls for d, v in bls[sid]]
         dim = [(sid, name, "FRED") for name, sid in self.fred] + \
               [(sid, name, "BLS") for name, sid in self.bls]
         return fact, dim

@@ -2,36 +2,20 @@
 
 ``compare`` runs a query's oracle SQL (``SparkEntry.oracleSql``) in DuckDB
 over the same generated tables and compares it with the Spark result dump,
-normalised as tools/check_oracle.py does: columns in name order, type parity,
-then the sorted multiset of rows.
+with the table list, value normalisation and type tokens of
+tools/check_oracle.py: columns in name order, type parity, then the sorted
+multiset of rows. It returns the reason for a mismatch instead of printing
+it, so each query's verdict can be attached to its op.
 """
-import datetime
-import decimal
 import glob
-import math
 import os
+import sys
 
 import duckdb
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-
-def norm(v):
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    return v
-
-
-def type_token(t):
-    t = t.upper()
-    if t.startswith("DECIMAL"):
-        return t
-    return {"VARCHAR": "STRING", "TEXT": "STRING", "CHAR": "STRING"}.get(t, t)
+from check_oracle import TABLES, norm, type_token  # noqa: E402
 
 
 def connect(tables_dir):

@@ -41,15 +41,17 @@ JVM_TIMEOUT_S = 165
 QUERY_OPS = ["wh_update_where", "wh_sql_merge", "text_bm25", "dedup_minhash_pairs",
              "sim_ivf_topk"]
 
-ETL = dict(n_fred=4, n_obs=120, n_bls=2, bls_months=36, change_share=0.5,
-           days_per_round=2, setup_reps=3)
+# etl_daily: a round is one 3-day block of the release calendar (two
+# release days and a quiet day, see gen.EtlSchedule); the backfill is set up
+# three times.
+ETL = dict(days_per_round=3, setup_reps=3)
 
 # A round takes about this long on 4 cores. A run times a fixed number of
 # whole rounds, --seconds / ROUND_S (at least two), so that every run of a
 # commit does the same work: a run that stopped on the clock would time
 # more, warmer rounds when the host is fast and fewer, colder ones when it
 # is slow. A traced run adds one round, so each of its halves has one.
-ROUND_S = 6.0
+ROUND_S = 12.0
 
 
 def declared(kind):
@@ -71,8 +73,7 @@ def generate(workload, seed, seconds, inputs):
     """Writes the workload's inputs; returns what the checks need."""
     import gen
     if workload == "etl_daily":
-        sched = gen.EtlSchedule(seed, ETL["n_fred"], ETL["n_obs"], ETL["n_bls"],
-                                ETL["bls_months"], ETL["change_share"])
+        sched = gen.EtlSchedule(seed)
         n_days = ETL["days_per_round"] * rounds(seconds, trace=True)
         expected = sched.write(inputs, n_days, ETL["days_per_round"], ETL["setup_reps"])
         return {"schedule": sched, "expected": expected}
@@ -86,7 +87,8 @@ def jvm(classes, jars, work, args):
              "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar"]
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    # a fixed, pre-touched heap keeps peak RSS from tracking G1's heap growth
+    # a fixed, pre-touched heap is resident in full from the start, so the
+    # resident set above it is off-heap memory (offheap_rss_mb)
     cmd = (["java", "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch", "-XX:-UsePerfData",
             f"-Djava.io.tmpdir={tmp}",
             "-Dlog4j2.configurationFile=" + os.path.join(HERE, "log4j2.properties")]
@@ -167,15 +169,18 @@ def check_queries(rec, tables_dir, work):
 def end_to_end(rec, ops, t_start, build_s):
     rounds = [r for r in rec["rounds"] if not r["traced"]]
     reps = [s["seconds"] for s in rec["setup"]]
+    # the first backfill also pays the JVM's class loading and JIT warm-up
+    # (setup_s counts it); backfill_s is the load itself
+    warm = reps[1:] or reps
     startup = rec["session_ready"] - t_start - build_s
     return {
         "setup_s": startup + S.median(reps),
         "wall_s": S.median([r["wall_s"] for r in rounds]),
         "cpu_s": S.median([r["cpu_s"] for r in rounds]),
         "op_p50_s": S.median([o["latency_s"] for o in ops if not o["failed"]]),
-        "backfill_s": S.median(reps),
+        "backfill_s": S.median(warm),
         "storage_mb": rec["finish"]["storage_bytes"] / 1e6,
-        "peak_rss_mb": rec["peak_rss_mb"],
+        "offheap_rss_mb": rec["offheap_rss_mb"],
     }
 
 
@@ -228,24 +233,20 @@ def per_layer(rec):
     return m, S.self_times(spans)
 
 
-def history_label(workload, wall, cpu):
-    """Appends this run to the workload's history and labels it against the
-    median wall/CPU ratio of earlier runs (needs three)."""
+def history_label(workload, stamp, wall, cpu):
+    """Appends this run to history.jsonl and labels it against the earlier
+    runs of the same workload built from the same sources."""
     path = os.path.join(RESULTS, "history.jsonl")
     past = []
     if os.path.exists(path):
         with open(path) as f:
             past = [json.loads(l) for l in f if l.strip()]
-    past = [p for p in past if p["workload"] == workload]
+    past = [p["wall_s"] / p["cpu_s"] for p in past
+            if p["workload"] == workload and p.get("sources") == stamp]
     with open(path, "a") as f:
-        f.write(json.dumps({"workload": workload, "wall_s": wall, "cpu_s": cpu}) + "\n")
-    if len(past) < 3:
-        return "unlabelled (fewer than 3 earlier runs)"
-    mid = S.median([p["wall_s"] / p["cpu_s"] for p in past])
-    ratio = wall / cpu
-    if ratio > 1.5 * mid:
-        return f"stall: wall/cpu {ratio:.2f} vs median {mid:.2f} of {len(past)} runs"
-    return f"ok: wall/cpu {ratio:.2f} vs median {mid:.2f} of {len(past)} runs"
+        f.write(json.dumps({"workload": workload, "sources": stamp,
+                            "wall_s": wall, "cpu_s": cpu}) + "\n")
+    return S.stall_label(past, wall, cpu)
 
 
 def main(argv=None):
@@ -255,7 +256,6 @@ def main(argv=None):
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--keep", action="store_true", help="keep the run's work directory")
     a = ap.parse_args(argv)
 
     try:
@@ -297,9 +297,6 @@ def main(argv=None):
 
         print(f"workload {a.workload}  seed {a.seed}  cores {rec['cores']}  "
               f"rounds {len(rec['rounds'])}  ops {len(ops)}  trace {a.trace}")
-        for lab in S.stall_labels(rec["rounds"]):
-            print(f"  round {lab['round']:>2}  wall {lab['wall_s']:.3f} s  cpu {lab['cpu_s']:.3f} s"
-                  f"  wall/cpu {lab['wall_per_cpu']:.3f}  {lab['label']}")
         good = [o["latency_s"] for o in ops if not o["failed"]]
         p90 = S.tail_percentile(good)
         print(f"error_rate {failed / attempted:.6g} ({failed}/{attempted} ops)")
@@ -317,7 +314,9 @@ def main(argv=None):
         else:
             metrics = end_to_end(rec, ops, t_start, build_s)
             units = declared("end_to_end")
-            print("run " + history_label(a.workload, metrics["wall_s"], metrics["cpu_s"]))
+            with open(os.path.join(classes, ".stamp")) as f:
+                stamp = f.read()
+            print("run " + history_label(a.workload, stamp, metrics["wall_s"], metrics["cpu_s"]))
         missing = {n for n, _ in units} ^ set(metrics)
         if missing:
             print(f"[perfbench] metrics do not match BENCHMARK.json: {sorted(missing)}", file=sys.stderr)
@@ -327,9 +326,11 @@ def main(argv=None):
         for p in problems:
             print(f"CHECK FAILED {p}")
         correct = not problems
+        reps = [x["seconds"] for x in rec["setup"]]
         print(f"phases: build {build_s:.1f} s, inputs {t_gen - t_start - build_s:.1f} s, "
               f"jvm to session {rec['session_ready'] - t_gen:.1f} s, "
-              f"set-up {rec['timed_start'] - rec['session_ready']:.1f} s, "
+              f"set-up {rec['timed_start'] - rec['session_ready']:.1f} s "
+              f"({' + '.join(f'{x:.2f}' for x in reps)}), "
               f"timed {rec['timed_end'] - rec['timed_start']:.1f} s, "
               f"finish+exit {t_jvm - rec['timed_end']:.1f} s, checks {time.time() - t_jvm:.1f} s",
               file=sys.stderr)
@@ -338,8 +339,7 @@ def main(argv=None):
                                       for n, u in units}}))
         return 0 if correct else 1
     finally:
-        if not a.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -14,15 +14,21 @@ import org.apache.spark.sql.SparkSession
   *          --rounds R --trace 0|1 --cores N [--queries q1,q2,...]
   *
   * Set-up repeats the workload's first load `setupReps` times, then `R`
-  * timed rounds run. With `--trace 1` odd rounds are traced and even rounds
-  * are not, so one process measures both and the gap is the tracing
-  * overhead.
+  * timed rounds run. A round's wall and CPU time is the time spent inside
+  * its ops ([[OpRunner]]), not the benchmark's own work between them.
+  * With `--trace 1` odd rounds are traced and even rounds are not, so one
+  * process measures both and the gap is the tracing overhead.
   */
 object Main {
-  /** The process's peak resident set (VmHWM), in MB. */
-  private def peakRssMb(): Double = {
+  /** Peak resident memory outside the Java heap, in MB: the process's peak
+    * resident set (VmHWM) minus the committed heap. run.py fixes the heap
+    * and pre-touches it, so it is resident in full from the start and the
+    * difference is metaspace, code cache, thread stacks and native buffers.
+    * Heap use is `jvm.heap_peak_mb` in traced runs. */
+  private def offHeapRssMb(): Double = {
     val line = scala.io.Source.fromFile("/proc/self/status").getLines().find(_.startsWith("VmHWM:"))
-    line.map(_.split("\\s+")(1).toDouble / 1024).getOrElse(0.0)
+    val hwm = line.map(_.split("\\s+")(1).toDouble / 1024).getOrElse(0.0)
+    hwm - java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted / 1048576.0
   }
 
   def main(argv: Array[String]): Unit = {
@@ -65,11 +71,10 @@ object Main {
       while (r < nRounds && w.hasRound(r)) {
         val traced = traceMode && r % 2 == 1
         trace.foreach(_.enabled = traced)
-        val c0 = Clock.cpu()
-        val t0 = Clock.now()
+        val (wall0, cpu0) = (OpRunner.insideWall, OpRunner.insideCpu)
         val ops = w.round(r, traced)
-        val wall = Clock.now() - t0
-        val cpu = Clock.cpu() - c0
+        val wall = OpRunner.insideWall - wall0
+        val cpu = OpRunner.insideCpu - cpu0
         trace.foreach(_.enabled = false)
         rounds += Map("round" -> r, "traced" -> traced, "wall_s" -> wall, "cpu_s" -> cpu, "ops" -> ops)
         r += 1
@@ -87,7 +92,7 @@ object Main {
         "rounds" -> rounds,
         "finish" -> finish,
         "heap_peak_mb" -> trace.map(_.heapPeakMb).getOrElse(0.0),
-        "peak_rss_mb" -> peakRssMb(),
+        "offheap_rss_mb" -> offHeapRssMb(),
         "spans" -> trace.map(_.allSpans.map(s => Map("id" -> s.id, "parent" -> s.parent,
           "op" -> s.op, "name" -> s.name, "start" -> s.start, "end" -> s.end))).getOrElse(Nil)))
     } finally spark.stop()

@@ -15,10 +15,18 @@ import org.apache.spark.sql.Row
 object OpRunner {
   private var nextOp = 0L
 
+  /** Wall and process CPU seconds spent inside [[run]] so far. A round's
+    * time is their growth over the round, so what the benchmark does
+    * between ops (input directories, fingerprints, disk walks, cleanup)
+    * is not counted. */
+  var insideWall = 0.0
+  var insideCpu = 0.0
+
   def run(round: Int, name: String, trace: Option[Trace])(
       body: => Map[String, Any]): Map[String, Any] = {
     nextOp += 1
     val op = nextOp
+    val (wall0, cpu0) = (Clock.now(), Clock.cpu())
     trace.foreach(_.beginOp(op))
     val start = Clock.now()
     val result =
@@ -26,6 +34,8 @@ object OpRunner {
       catch { case e: Throwable => Left(e) }
     val end = Clock.now()
     val layers = trace.map(_.endOp()).getOrElse(Map.empty)
+    insideWall += Clock.now() - wall0
+    insideCpu += Clock.cpu() - cpu0
     val base = Map("op" -> op, "round" -> round, "name" -> name, "layers" -> layers)
     result match {
       case Right(detail) => base ++ detail ++ Map("ok" -> true, "latency_s" -> (end - start))

@@ -1,6 +1,6 @@
 """Turns the JVM's run record into verdicts and metrics. Pure functions, so
-the rules (fail-closed ops, the percentile rule, stall labels, span self
-times) are tested without a JVM in test_perfbench.py."""
+the rules (fail-closed ops, the percentile rule, the stall label, span
+self times) are tested without a JVM in test_perfbench.py."""
 import math
 import statistics
 
@@ -29,22 +29,16 @@ def judge(ops, check):
     return out
 
 
-def stall_labels(rounds, factor=1.5):
-    """Labels rounds whose wall/CPU ratio is `factor` away from the median
-    ratio: far above means the host stalled the process (wall without CPU).
-    Nothing is dropped; the label goes beside the number."""
-    ratios = [r["wall_s"] / max(r["cpu_s"], 1e-9) for r in rounds]
-    mid = median(ratios)
-    labels = []
-    for r, x in zip(rounds, ratios):
-        label = "ok"
-        if x > mid * factor:
-            label = "stall"
-        elif x < mid / factor:
-            label = "busy"
-        labels.append({"round": r["round"], "wall_s": r["wall_s"], "cpu_s": r["cpu_s"],
-                       "wall_per_cpu": x, "label": label})
-    return labels
+def stall_label(past_ratios, wall, cpu, factor=1.5, min_past=3):
+    """Labels a run whose wall/CPU ratio is `factor` above the median ratio
+    of earlier runs of the same code: wall time without CPU means the host
+    stalled the process. Nothing is dropped; the label goes beside the
+    number."""
+    if len(past_ratios) < min_past:
+        return f"unlabelled (fewer than {min_past} earlier runs)"
+    mid, ratio = median(past_ratios), wall / cpu
+    verdict = "stall" if ratio > factor * mid else "ok"
+    return f"{verdict}: wall/cpu {ratio:.2f} vs median {mid:.2f} of {len(past_ratios)} runs"
 
 
 def union_length(intervals):

@@ -45,8 +45,8 @@ class GeneratorTest(unittest.TestCase):
     def etl(self, seed, name):
         out = os.path.join(self.dir, name)
         os.makedirs(out)
-        sched = gen.EtlSchedule(seed, 4, 24, 2, 12, 0.25)
-        expected = sched.write(out, 6, 1, 1)
+        sched = gen.EtlSchedule(seed)
+        expected = sched.write(out, 6, 3, 1)
         return tree(out), expected, sched.final_state(6)
 
     def test_etl_payloads_are_a_function_of_the_seed(self):
@@ -55,11 +55,27 @@ class GeneratorTest(unittest.TestCase):
         self.assertNotEqual(a[0], c[0])
 
     def test_etl_expected_counts_add_up(self):
-        _, expected, (fact, _) = self.etl(7, "a")
-        self.assertEqual(expected[0]["fact"]["inserted"], 4 * 24 + 2 * 12)
+        _, expected, (fact, dim) = self.etl(7, "a")
+        self.assertEqual(len(dim), 9 + 5)
+        # 1960-01..2024-05: 773 months, 257 quarters; BLS 2021-01..2024-05
+        self.assertEqual(expected[0]["fact"]["inserted"], 6 * 773 + 3 * 257 + 5 * 41)
+        # every 3-day block: two release days (one period added, one revised),
+        # then a quiet day
+        changes = [(expected[d]["fact"]["inserted"], expected[d]["fact"]["updated"])
+                   for d in range(1, 7)]
+        self.assertEqual(changes, [(1, 1), (1, 1), (0, 0)] * 2)
         for day in range(1, 7):
-            self.assertGreaterEqual(sum(expected[day]["fact"].values()), expected[0]["fact"]["inserted"])
+            self.assertEqual(sum(expected[day]["fact"].values()),
+                             expected[0]["fact"]["inserted"] + sum(c[0] for c in changes[:day]))
         self.assertEqual(len(fact), sum(expected[6]["fact"].values()))
+
+    def test_etl_release_slots_do_not_depend_on_the_seed(self):
+        def slots(seed):
+            sched = gen.EtlSchedule(seed)
+            return [sched.freq.get(changed, "B" if bls else None)
+                    for _, _, _, changed, bls, _ in sched.days(21)][1:]
+        self.assertEqual(slots(7), slots(8))
+        self.assertEqual([slots(7).count(s) for s in ["M", "Q", "B", None]], [6, 3, 5, 7])
 
     def test_harness_tables_are_a_function_of_the_seed(self):
         import pyarrow.parquet as pq
@@ -127,11 +143,11 @@ class SpanTest(unittest.TestCase):
         self.assertAlmostEqual(st["etl.run"]["self_s"], 4.0)
         self.assertEqual(S.etl_action_split(spans), {1: (8.0, 4.0)})
 
-    def test_stall_is_labelled_not_dropped(self):
-        rounds = [{"round": i, "wall_s": w, "cpu_s": 10.0} for i, w in enumerate([4.0, 4.2, 3.9, 9.0])]
-        labels = S.stall_labels(rounds)
-        self.assertEqual(len(labels), 4)
-        self.assertEqual([l["label"] for l in labels], ["ok", "ok", "ok", "stall"])
+    def test_stall_is_labelled_against_earlier_runs(self):
+        past = [0.40, 0.42, 0.39]
+        self.assertTrue(S.stall_label(past, 4.1, 10.0).startswith("ok"))
+        self.assertTrue(S.stall_label(past, 9.0, 10.0).startswith("stall"))
+        self.assertTrue(S.stall_label(past[:2], 9.0, 10.0).startswith("unlabelled"))
 
 
 if __name__ == "__main__":
