@@ -160,27 +160,22 @@ object Jdbc {
     atTextEdge(df.select(Schemas.fact.fieldNames.map(col): _*))
       .write.mode(SaveMode.Append).jdbc(url, FactTable, props(url))
 
-  /** Fact upsert against the SQL warehouse, same classification as the
-    * parquet path (`Merge.classify`): absent keys append via Spark's JDBC
-    * writer; changed keys run as batched UPDATEs per partition
-    * (`src/load.py:86-103`). Returns the reference's stats dict. */
+  /** Fact upsert against the SQL warehouse, same one-evaluation
+    * classification as the parquet path ([[Merge.classifyFact]]): absent
+    * keys append via Spark's JDBC writer; changed keys run as batched
+    * UPDATEs per partition (`src/load.py:86-103`). Returns the reference's
+    * stats dict. */
   def mergeFact(spark: SparkSession, incoming: DataFrame, url: String): Map[String, Long] = {
     ensureTables(url)
-    val existing = scanFact(spark, url)
-    val keys = Seq("series_id", "date")
-    val deduped = Merge.lastWinsByKey(incoming, keys, col("value").desc_nulls_last)
-    val classified = Merge.classify(deduped, existing, keys, "value")
-      .localCheckpoint(true) // classify once; reused by stats + both legs
-    val stats = Merge.stats(classified)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    appendFact(classified.filter(col("action") === "insert").drop("action"), url)
+    val classified = Merge.classifyFact(incoming, scanFact(spark, url),
+      Seq("series_id", "date"), "value")
+    val stats = classified.report("insert", "update", "unchanged")
+    if (stats("inserted") > 0) appendFact(classified.rowsOf("insert"), url)
 
     val updates = atTextEdge(
-      classified.filter(col("action") === "update").drop("action")
-        .select(Schemas.fact.fieldNames.map(col): _*))
+      classified.rowsOf("update").select(Schemas.fact.fieldNames.map(col): _*))
     val driverClass = dialectOf(url).driverClass // resolve on the driver,
-    updates.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+    if (stats("updated") > 0) updates.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       if (rows.hasNext) {
         Class.forName(driverClass) // load inside each executor JVM
         val conn = DriverManager.getConnection(url)
@@ -207,21 +202,17 @@ object Jdbc {
       }
     }
 
-    Map("inserted" -> 0L, "updated" -> 0L, "unchanged" -> 0L) ++
-      stats.map { case (k, v) =>
-        (k match { case "insert" => "inserted"; case "update" => "updated"; case o => o }) -> v
-      }
+    stats
   }
 
   /** Dim insert-if-absent over JDBC (`src/load.py:108-134`). */
   def mergeDim(spark: SparkSession, incoming: DataFrame, url: String): Map[String, Long] = {
     ensureTables(url)
-    val newRows = Merge.insertIfAbsent(incoming, scanDim(spark, url), Seq("series_id"))
-      .localCheckpoint(true)
-    val inserted = newRows.count()
-    if (inserted > 0)
-      newRows.select(Schemas.dim.fieldNames.map(col): _*)
+    val classified = Merge.classifyDim(incoming, scanDim(spark, url), Seq("series_id"))
+    val stats = classified.report("insert", "unchanged")
+    if (stats("inserted") > 0)
+      classified.rowsOf("insert").select(Schemas.dim.fieldNames.map(col): _*)
         .write.mode(SaveMode.Append).jdbc(url, DimTable, props(url))
-    Map("inserted" -> inserted, "unchanged" -> (incoming.count() - inserted))
+    stats
   }
 }

@@ -62,6 +62,43 @@ object Merge {
       keys: Seq[String]): DataFrame =
     incoming.join(existing, keys, "left_anti")
 
+  /** A classified batch evaluated once: the rows (with `action`) eagerly
+    * checkpointed, and their count per (source, action) from one collect
+    * over the checkpoint — stats and written rows share one evaluation. */
+  final case class Classified(rows: DataFrame, counts: Map[(String, String), Long]) {
+    /** Per-action counts summed over sources, under the run report's names
+      * (`src/load.py:53,105`); an action with no rows reports 0. */
+    def report(actions: String*): Map[String, Long] = actions.map { a =>
+      Map("insert" -> "inserted", "update" -> "updated").getOrElse(a, a) ->
+        counts.collect { case ((_, `a`), n) => n }.sum
+    }.toMap
+
+    def rowsOf(action: String): DataFrame =
+      rows.filter(col("action") === action).drop("action")
+  }
+
+  private def evaluate(classified: DataFrame): Classified = {
+    val rows = classified.localCheckpoint(eager = true)
+    val counts = rows.groupBy("source", "action").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    Classified(rows, counts)
+  }
+
+  /** The fact load's classification, shared by the parquet and JDBC
+    * sinks: dedupe `incoming` last-wins on `keys` (largest value first,
+    * nulls last) and [[classify]] it against `existing`, evaluated once. */
+  def classifyFact(incoming: DataFrame, existing: DataFrame, keys: Seq[String],
+      valueCol: String): Classified =
+    evaluate(classify(lastWinsByKey(incoming, keys, col(valueCol).desc_nulls_last),
+      existing, keys, valueCol))
+
+  /** The dim load's [[insertIfAbsent]], evaluated once: [[classify]] on a
+    * value that never changes, so a key absent from `existing` is an
+    * insert and every other row is unchanged (never overwritten). */
+  def classifyDim(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): Classified =
+    evaluate(classify(incoming.withColumn("_v", lit(0.0)),
+      existing.select(keys.map(col) :+ lit(0.0).as("_v"): _*), keys, "_v").drop("_v"))
+
   /** Reference risk #6 (SURVEY.md §7.4): duplicate keys inside one incoming
     * batch would violate the reference's PK; we resolve last-wins by an
     * explicit order before merging. */

@@ -14,11 +14,11 @@ import graft.model.Schemas.ExtractionState
 
 /** The 3-phase pipeline driver (O1-O3, `/root/reference/src/main.py:18-74`)
   * re-expressed Spark-first: extract is driver-side HTTP + raw-zone
-  * snapshots + state commits; transform and load are ONE lazy logical plan
-  * (explode → cast → union → merge-join) that only executes at the sink
-  * action. Phase failures abort the run with a phase-tagged error; a
-  * single bad FRED series is skipped, not fatal (O2,
-  * `src/main.py:41-47`).
+  * snapshots + state commits; transform builds one lazy fact plan that
+  * load evaluates exactly once, in one checkpointed dedupe + classify
+  * ([[Merge.classifyFact]]). Phase failures abort the run with a
+  * phase-tagged error; a single bad FRED series is skipped, not fatal
+  * (O2, `src/main.py:41-47`).
   */
 object Pipeline {
 
@@ -40,14 +40,14 @@ object Pipeline {
       rawDir: Path, today: LocalDate, now: Instant): String = {
     val prev = store.load("fred", seriesId)
     val json = source.fetchFred(seriesId, prev.flatMap(_.lastObservationDate))
-    val obsJson = State.fredObservationsJson(json)
-    val hash = State.contentHash(obsJson)
+    val obs = State.fredObservations(json)
+    val hash = State.contentHash(obs)
     if (!prev.exists(_.lastHash == hash)) {
       Files.createDirectories(rawDir)
       Files.writeString(rawDir.resolve(
         s"FRED_${seriesId}_${today.toString.replace('-', '_')}.json"), json)
     }
-    val newest = lastObservationDate(obsJson)
+    val newest = State.lastObservationDate(obs)
     store.save(ExtractionState("fred", seriesId,
       State.advanceOffset(prev.flatMap(_.lastObservationDate), newest),
       hash, now.toString))
@@ -72,66 +72,38 @@ object Pipeline {
     json
   }
 
-  private def lastObservationDate(obsJson: String): Option[String] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = mapper.readTree(obsJson)
-    if (arr == null || !arr.isArray || arr.size() == 0) None
-    else Option(arr.get(arr.size() - 1).get("date")).map(_.asText)
-  }
-
   /** Load phase: join-based MERGE into the transactional parquet warehouse
     * (AtomicTable), rewriting ONLY the source partitions that actually
     * changed — the R1 hash-skip idea applied at the storage layer: a
     * one-series revision must not rewrite the other sources' terabytes.
-    * The commit is AtomicTable's single version-pointer rename, matching
-    * the reference's one-transaction MERGE (`src/load.py:86-103`): a crash
-    * mid-write leaves the table readable at the previous version (no
-    * localCheckpoint needed — staged txn dirs never overwrite the files
-    * the plan is reading). */
+    * Stats, changed sources and upserted rows all come from the one
+    * checkpointed [[Merge.classifyFact]]. The commit is AtomicTable's
+    * single version-pointer rename, matching the reference's
+    * one-transaction MERGE (`src/load.py:86-103`). */
   def mergeFact(spark: SparkSession, incoming: DataFrame, factPath: String): Map[String, Long] = {
     val existing = AtomicTable.read(spark, factPath, Schemas.fact)
     val keys = Seq("series_id", "date")
-    val deduped = Merge.lastWinsByKey(incoming, keys, col("value").desc_nulls_last)
-    val classified = Merge.classify(deduped, existing, keys, "value")
-    val stats = Merge.stats(classified)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-    // sources with at least one insert/update; unchanged partitions are
-    // neither read again nor rewritten
-    val changedSources = classified.filter(col("action") =!= "unchanged")
-      .select("source").distinct().collect().map(_.getString(0)).toSet
-    if (changedSources.nonEmpty) {
-      val newRows = Merge.upsert(
-        existing.filter(col("source").isInCollection(changedSources)),
-        deduped.filter(col("source").isInCollection(changedSources)), keys)
-      AtomicTable.replacePartitions(spark, factPath, newRows, "source")
-    }
-    Map("inserted" -> 0L, "updated" -> 0L, "unchanged" -> 0L) ++
-      stats.map { case (k, v) =>
-        (k match { case "insert" => "inserted"; case "update" => "updated"; case o => o }) -> v
-      }
+    val classified = Merge.classifyFact(incoming, existing, keys, "value")
+    // unchanged partitions are neither read again nor rewritten
+    val sources = classified.counts.keySet.collect { case (s, a) if a != "unchanged" => s }
+    val changed = col("source").isInCollection(sources)
+    if (sources.nonEmpty)
+      AtomicTable.replacePartitions(spark, factPath, Merge.upsert(existing.filter(changed),
+        classified.rows.filter(changed).drop("action"), keys), "source")
+    classified.report("insert", "update", "unchanged")
   }
 
   /** Dim load: insert-if-absent, append-only (`src/load.py:108-134`). */
   def mergeDim(spark: SparkSession, incoming: DataFrame, dimPath: String): Map[String, Long] = {
-    val exists = Files.exists(Paths.get(dimPath))
     val existing =
-      if (exists) spark.read.parquet(dimPath)
+      if (Files.exists(Paths.get(dimPath))) spark.read.parquet(dimPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Schemas.dim)
-    val newRows = Merge.insertIfAbsent(incoming, existing, Seq("series_id")).cache()
-    val inserted = newRows.count()
-    if (inserted > 0) newRows.write.mode(SaveMode.Append).parquet(dimPath)
-    newRows.unpersist()
-    Map("inserted" -> inserted, "unchanged" -> (incoming.count() - inserted))
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val children = Files.list(p)
-      try children.forEach(deleteRecursively) finally children.close()
-    }
-    Files.deleteIfExists(p)
+    val classified = Merge.classifyDim(incoming, existing, Seq("series_id"))
+    val stats = classified.report("insert", "unchanged")
+    if (stats("inserted") > 0)
+      classified.rowsOf("insert").write.mode(SaveMode.Append).parquet(dimPath)
+    stats
   }
 
   /** Full run: extract → transform → load with the reference's failure
@@ -178,7 +150,7 @@ object Pipeline {
         case NonFatal(e) => throw new RuntimeException("Pipeline failed during transform", e)
       }
 
-    // Phase 3: load (the only actions in the run)
+    // Phase 3: load (the only Spark actions in the run)
     try {
       val factStats = mergeFact(spark, fact, layout.factPath)
       val dimStats = mergeDim(spark, dim, layout.dimPath)

@@ -14,7 +14,9 @@ import graft.model.Schemas
   * order, T7 date-from-parts, T8 reverse-map lookup with fallback, T10
   * oldest-first ordering. All built-ins — the plans stay fully inside
   * whole-stage codegen and Catalyst prunes the unused raw fields at the
-  * scan.
+  * scan. A raw frame is one API response, so T10 sorts it within a single
+  * partition (`coalesce(1)`): a total order with no sampling job and no
+  * shuffle.
   */
 object Normalize {
 
@@ -24,14 +26,14 @@ object Normalize {
   /** Parse a raw FRED `series/observations` response.
     * (`src/transform.py:4-30`; fixture FIXTURES.md A1.) */
   def fredObservations(raw: DataFrame, seriesId: String, seriesName: String): DataFrame =
-    raw.select(explode(col("observations")).as("o"))
+    raw.coalesce(1).select(explode(col("observations")).as("o"))
       .select(
         lit(seriesId).as("series_id"),
         lit(seriesName).as("series_name"),
         to_date(col("o.date"), "yyyy-MM-dd").as("date"),
         expr("try_cast(o.value AS double)").as("value"), // "." -> null
         lit("FRED").as("source"))
-      .orderBy("date")
+      .sortWithinPartitions("date")
 
   /** Parse a raw BLS v2 batch response for all requested series.
     * (`src/transform.py:33-70`; fixture FIXTURES.md A2.) BLS data arrives
@@ -40,7 +42,7 @@ object Normalize {
     * to the id as the name (`src/transform.py:60`). */
   def blsBatch(raw: DataFrame, seriesMap: Seq[(String, String)]): DataFrame = {
     val idToName = typedlit(seriesMap.map(_.swap).toMap)
-    raw
+    raw.coalesce(1)
       .select(explode(col("Results.series")).as("s"))
       .select(col("s.seriesID").as("series_id"), explode(col("s.data")).as("d"))
       .select(
@@ -53,7 +55,7 @@ object Normalize {
           lit(1)).as("date"),
         expr("try_cast(d.value AS double)").as("value"), // "-" -> null
         lit("BLS").as("source"))
-      .orderBy("date", "series_id")
+      .sortWithinPartitions("date", "series_id")
   }
 
   /** Read one raw JSON document string into a typed single-row frame. */

@@ -43,21 +43,26 @@ object State {
 
   /** R1: hex sha-256 of the canonical serialization of a JSON document
     * (key-order independent — `tests/test_extract.py:29-31`). */
-  def contentHash(json: String): String = {
-    val canonical = mapper.writeValueAsString(canonicalize(mapper.readTree(json)))
+  def contentHash(json: String): String = contentHash(mapper.readTree(json))
+
+  /** [[contentHash]] of an already-parsed document. */
+  def contentHash(node: JsonNode): String = {
+    val canonical = mapper.writeValueAsString(canonicalize(node))
     MessageDigest.getInstance("SHA-256")
       .digest(canonical.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
   }
 
-  /** Extract the `observations` array of a FRED response for hashing —
-    * the reference hashes only the observations, not response metadata
-    * (`src/extract.py:97`). */
-  def fredObservationsJson(json: String): String = {
-    val node = mapper.readTree(json)
-    val obs = node.get("observations")
-    if (obs == null) "[]" else mapper.writeValueAsString(obs)
-  }
+  /** The `observations` array of a FRED response, parsed once — the
+    * reference hashes only the observations, not response metadata
+    * (`src/extract.py:97`). A response without the array reads as empty. */
+  def fredObservations(json: String): JsonNode =
+    Option(mapper.readTree(json).get("observations")).getOrElse(mapper.createArrayNode())
+
+  /** Date of the last (newest) observation; None when there is none. */
+  def lastObservationDate(obs: JsonNode): Option[String] =
+    if (!obs.isArray || obs.size() == 0) None
+    else Option(obs.get(obs.size() - 1).get("date")).map(_.asText)
 
   /** R3: retry with exponential backoff — `attempts` tries, sleeping
     * base·2^i between them, retrying only when `retryOn` matches; other

@@ -458,4 +458,43 @@ class PlanAuditSpec extends SparkSuite {
     assert(!p.contains("SortMergeJoin"),
       "a 100 TB data side must not shuffle to subtract a small vector")
   }
+
+  test("ingest normalizers sort without an exchange; combineFactTables sorts globally once") {
+    // each normalizer sorts one API response inside one partition; the
+    // only global sort of the daily load is the combined fact frame's
+    // canonical sort, with at most one (sampled, range-partitioned)
+    // exchange — none when the union of single-partition inputs stays a
+    // single partition
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.ingest.{Fixtures, Normalize}
+    def executed(df: DataFrame): Seq[SparkPlan] = {
+      df.collect()
+      def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case o => o +: o.children.flatMap(walk)
+      }
+      walk(df.queryExecution.executedPlan)
+    }
+    def exchanges(nodes: Seq[SparkPlan]) = nodes.collect { case e: Exchange => e }
+    val freds = Seq("UNRATE", "FEDFUNDS").map(id => Normalize.fredObservations(
+      Normalize.readFredJson(spark, Fixtures.fredPayload), id, id))
+    val bls = Normalize.blsBatch(
+      Normalize.readBlsJson(spark, Fixtures.blsPayload), Fixtures.blsSeriesMap)
+    for (df <- freds.head +: Seq(bls))
+      assert(exchanges(executed(df)).isEmpty,
+        s"normalizer must not shuffle:\n${df.queryExecution}")
+    val fact = graft.etl.Transforms.combineFactTables(freds :+ bls)
+    val nodes = executed(fact)
+    val ex = exchanges(nodes)
+    val globalSorts = nodes.collect { case s: SortExec if s.global => s }
+    assert(globalSorts.size === 1 && ex.size <= 1 &&
+      ex.forall(_.outputPartitioning.isInstanceOf[RangePartitioning]),
+      s"expected one global sort over at most one range exchange:\n" +
+        fact.queryExecution.executedPlan)
+  }
 }

@@ -115,6 +115,35 @@ class PipelineSpec extends SparkSuite {
     assert(fred.head.getDouble(fred.head.fieldIndex("value")) === 6.1)
   }
 
+  test("one day revising a FRED and a BLS series rewrites both partitions in one commit") {
+    val (layout, payloads) = freshLayout()
+    val src = new FileSeriesSource(payloads)
+    Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    val root = java.nio.file.Paths.get(layout.factPath)
+    val before = AtomicTable.manifest(root).get
+    Files.writeString(payloads.resolve("fred_UNRATE.json"),
+      Fixtures.fredPayload.replace("\"5.2\"", "\"5.9\""))
+    Files.writeString(payloads.resolve("bls.json"),
+      Fixtures.blsPayload.replace("\"34.85\"", "\"35.10\""))
+    val r = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(r.factStats === Map("inserted" -> 0L, "updated" -> 2L, "unchanged" -> 7L))
+    val after = AtomicTable.manifest(root).get
+    assert(after.version === before.version + 1)
+    for (source <- Seq("FRED", "BLS"))
+      assert(after.partitions(source) !== before.partitions(source),
+        s"the $source partition must be rewritten")
+    val fact = AtomicTable.read(spark, layout.factPath, graft.model.Schemas.fact)
+    def value(id: String) = fact.filter(s"series_id = '$id' AND date = DATE'2024-03-01'")
+      .collect().map(_.getAs[Double]("value")).toSeq
+    assert(value("UNRATE") === Seq(5.9))
+    assert(value("CES0500000003") === Seq(35.10))
+
+    val rerun = Pipeline.run(spark, src, layout, fredSeries, Fixtures.blsSeriesMap, today, now)
+    assert(rerun.factStats === Map("inserted" -> 0L, "updated" -> 0L, "unchanged" -> 9L))
+    assert(AtomicTable.currentVersion(root) === Some(after.version),
+      "a no-change rerun must not commit")
+  }
+
   test("a crash before the version swap leaves the table at the old version") {
     val (layout, payloads) = freshLayout()
     val src = new FileSeriesSource(payloads)

@@ -66,4 +66,35 @@ class NormalizeSpec extends SparkSuite {
       Normalize.readBlsJson(spark, Fixtures.blsMissingPayload), Fixtures.blsSeriesMap)
     assert(df.collect().head.isNullAt(3))
   }
+
+  // a raw frame of several documents spread over several partitions: the
+  // interleaved dates make any per-partition sort come out unordered, so
+  // only a sort over the whole frame passes
+  private def spread(docs: Seq[String], schema: org.apache.spark.sql.types.StructType) = {
+    import spark.implicits._
+    val raw = spark.read.schema(schema).json(spark.sparkContext.parallelize(docs, 2).toDS())
+    assert(raw.rdd.glom().collect().count(_.nonEmpty) === 2)
+    raw
+  }
+
+  test("FRED: multi-document, multi-partition input still comes out oldest-first") {
+    def doc(dates: String*) = dates.map(d => s"""{"date": "$d", "value": "1.0"}""")
+      .mkString("""{"observations": [""", ", ", "]}")
+    val raw = spread(Seq(doc("2024-03-01", "2024-01-01"), doc("2024-04-01", "2024-02-01")),
+      graft.model.Schemas.fredResponse)
+    val dates = Normalize.fredObservations(raw, "X", "X").collect().map(_.getDate(2).toString)
+    assert(dates.toSeq === Seq("2024-01-01", "2024-02-01", "2024-03-01", "2024-04-01"))
+  }
+
+  test("BLS: multi-document, multi-partition input is ordered by (date, series_id)") {
+    def doc(id: String, periods: String*) = periods
+      .map(p => s"""{"year": "2024", "period": "$p", "value": "1.0"}""")
+      .mkString(s"""{"Results": {"series": [{"seriesID": "$id", "data": [""", ", ", "]}]}}")
+    val raw = spread(Seq(doc("S2", "M03", "M01"), doc("S1", "M02", "M01")),
+      graft.model.Schemas.blsResponse)
+    val keys = Normalize.blsBatch(raw, Seq.empty).collect()
+      .map(r => (r.getDate(2).toString, r.getString(0)))
+    assert(keys.toSeq === Seq(("2024-01-01", "S1"), ("2024-01-01", "S2"),
+      ("2024-02-01", "S1"), ("2024-03-01", "S2")))
+  }
 }

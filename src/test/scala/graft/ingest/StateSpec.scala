@@ -78,8 +78,12 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("FRED observations extraction isolates the array for hashing") {
-    val obs = State.fredObservationsJson(Fixtures.fredPayload)
+    val node = State.fredObservations(Fixtures.fredPayload)
+    val obs = node.toString
     assert(obs.startsWith("[") && obs.contains("2024-01-01"))
     assert(!obs.contains("Percent")) // response metadata not hashed
+    // hashing the parsed array equals hashing its serialized text
+    assert(State.contentHash(node) === State.contentHash(obs))
+    assert(State.lastObservationDate(node) === Some("2024-03-01"))
   }
 }
